@@ -5905,8 +5905,8 @@ object PipelineOps {
     * window; the ITERATION state (per-node masses) localCheckpoints per
     * round — the q320 lesson: persist leaves nested InMemoryRelation
     * renderings that double the plan string per round. Static frames
-    * (nodes, edges) persist once and release after the final round
-    * materializes. */
+    * (nodes, edges) persist once; edges is released only after the
+    * eager last round has run every round against the cache. */
   def q354LabelPropagation(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Fingerprint.register(s)
@@ -5939,7 +5939,7 @@ object PipelineOps {
     val byDoc = org.apache.spark.sql.expressions.Window.partitionBy($"doc_id")
     var un: DataFrame = null
     var full = m0
-    for (_ <- 1 to LabelPropRounds) {
+    for (round <- 1 to LabelPropRounds) {
       un = edges.join(full.withColumnRenamed("doc_id", "u"), Seq("u"))
         .groupBy($"v".as("doc_id"), $"label")
         .agg(sum($"m").as("infl"))
@@ -5947,7 +5947,9 @@ object PipelineOps {
         .withColumn("m", expr("infl * 1000000 div sum(infl) OVER " +
           "(PARTITION BY doc_id)"))
         .select($"doc_id", $"label", $"m")
-        .localCheckpoint(false) // rides the next round's join (q378 rule)
+        // earlier rounds ride the next round's join (q378 rule); the last
+        // is eager, so every round runs while edges is still cached
+        .localCheckpoint(eager = round == LabelPropRounds)
       full = m0.unionByName(un)
     }
     edges.unpersist()

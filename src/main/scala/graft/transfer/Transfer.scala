@@ -15,8 +15,12 @@ import org.apache.spark.sql.types._
   *   per-batch PG transaction + COPY   | `df.write` (per-partition tasks)
   *   zero-date → NULL (`:526-541`)     | [[zeroDatesToNull]] column rule
   *   WKB point → (x,y) (`:596-633`)    | [[PointDecode]] expression
-  *   COUNT(*) validation (`:313-356`)  | [[validate]]: counts + order-
-  *                                     | independent xor checksum (stronger)
+  *   COUNT(*) validation (`:313-356`)  | count + order-independent xor
+  *                                     | checksum (stronger), see below
+  *
+  * [[copyTable]] reads the source once, in the write pass that carries the
+  * fused count and checksum, then reads the destination back once. JDBC
+  * sources are not cached: the observed pass is the snapshot.
   *
   * Endpoints are pluggable: parquet directories (the test corpus) or JDBC
   * (any dialect on the classpath; Derby is used in tests). At cluster scale
@@ -149,6 +153,8 @@ object Transfer {
         df.write.mode(if (truncate) SaveMode.Overwrite else SaveMode.Append)
           .orc(s"$dir/$table.orc")
       case j: Jdbc =>
+        // Derby targets need NULL strings bound as VARCHAR, not CLOB
+        if (j.url.startsWith("jdbc:derby:")) graft.types.DerbyGraftDialect.install()
         df.write.format("jdbc")
           .option("url", j.url)
           .option("dbtable", j.table.replace("%s", table))
@@ -310,7 +316,7 @@ object Transfer {
                     pointCols: Seq[String] = Nil,
                     validate: Boolean = true): TransferResult = {
     val dstExists = exists(spark, dst, table)
-    // JDBC sources are SNAPSHOTTED for the run (copyTable's discipline):
+    // JDBC sources are SNAPSHOTTED for the run:
     // the delta count, the append, and the post-append validation each
     // launch a job, and a live table mutating between them would misreport
     // the delta or fail the checksum on a correct sync
@@ -351,63 +357,55 @@ object Transfer {
     } finally if (srcSnapshot) srcDf.unpersist(blocking = false)
   }
 
-  /** Full per-table transfer: read → convert → write → validate.
-    * The source side of validation aggregates over the SAME converted frame
-    * the writer produced (not a raw re-read), so in-flight conversions
-    * (zero-dates, point decode) never trip the checksum. JDBC sources are
-    * cached for the duration so source count/checksum/write see one
-    * snapshot; parquet sources are immutable files and re-scan for free
-    * (whole-stage-codegen'd scans beat cache materialization there).
+  /** Full per-table transfer: read → convert → write → validate, in two
+    * passes over the data:
     *
-    * TWO passes over the data total: the source count is a metadata-only
-    * job (parquet row-group counts; the JDBC path materializes its snapshot
-    * cache), the source checksum rides the write pass itself via
-    * `observe()` (each row is hashed as it flows to the writer — no
-    * separate source scan), and the destination re-read is the one
-    * unavoidable full validation pass. At 100 TB that is one saved
-    * table-sized scan per table versus the naive stats→write→stats chain. */
+    *  1. one source read, done by the write. The written frame carries
+    *     `observe(count, checksum)`, so count, checksum and written rows all
+    *     come from one pass: the observation is the source snapshot. JDBC
+    *     sources are therefore neither cached nor pre-counted, and write with
+    *     their read partitioning (`partitionColumn`/`numPartitions`). File
+    *     sources count for free and [[scaleUpPartitions]] sizes their write.
+    *  2. one destination read-back, whose count and checksum must equal the
+    *     observed ones.
+    *
+    * Both sides hash the CONVERTED frame (zero-dates, point decode), never a
+    * raw re-read. An empty table takes the same path and reads (0, 0). */
   def copyTable(spark: SparkSession, src: Endpoint, dst: Endpoint, table: String,
                 truncate: Boolean = true,
                 pointCols: Seq[String] = Nil,
                 validateChecksum: Boolean = true): TransferResult = {
-    val df1 = decodePoints(zeroDatesToNull(read(spark, src, table)), pointCols)
-    val snapshot = src.isInstanceOf[Jdbc]
-    if (snapshot) df1.persist()
-    try {
-      // row count only: Catalyst strips the conversion projections under a
-      // bare count, so parquet answers from row-group metadata (no scan)
-      val srcRows = df1.count()
-      if (srcRows == 0L) { // empty-table shortcut (sync_data.go:64-113)
-        write(df1, dst, table, truncate)
-        return TransferResult(table, 0L, 0L, checksumMatch = true)
-      }
-      // Re-size write parallelism from row count × estimated row width.
-      // For JDBC this bounds per-partition transaction size (the scalable
-      // version of the reference's max_rows_per_batch pagination bound);
-      // for file targets it decouples writer parallelism from the source's
-      // split count (a single-row-group source file would otherwise funnel
-      // the whole encode+write through one task). Only ever scales UP —
-      // collapsing an already-parallel source would serialize the write.
-      val width = math.max(df1.schema.defaultSize, 20 * df1.schema.size)
-      val targetBytes = dst match {
-        case _: Jdbc => 64L << 20
-        case _ => 16L << 20
-      }
-      val target = graft.catalog.Catalog.suggestNumPartitions(
-        srcRows, width, targetBytesPerPartition = targetBytes)
-      val df = if (target > df1.rdd.getNumPartitions) df1.repartition(target) else df1
-      // source checksum fused into the write pass: every row is hashed as
-      // it flows to the writer, so no standalone source-stats scan runs
-      val obs = org.apache.spark.sql.Observation(s"graft_src_stats_$table")
-      val observed = df.observe(obs,
-        count(lit(1)).as("n"), checksumCol(df).as("chk"))
-      write(observed, dst, table, truncate)
-      val m = obs.get
-      val obsRows = m("n").asInstanceOf[Long]
-      val srcSum = Option(m("chk")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      val (dstRows, dstSum) = stats(read(spark, typed(dst, df.schema), table))
-      val ok = !validateChecksum || srcSum == dstSum
-      TransferResult(table, obsRows, dstRows, ok && obsRows == dstRows)
-    } finally if (snapshot) df1.unpersist()
+    val converted = decodePoints(zeroDatesToNull(read(spark, src, table)), pointCols)
+    val df = src match {
+      case _: Jdbc => converted
+      case _ => scaleUpPartitions(converted, dst)
+    }
+    val obs = org.apache.spark.sql.Observation(s"graft_src_stats_$table")
+    write(df.observe(obs, count(lit(1)).as("n"), checksumCol(df).as("chk")),
+      dst, table, truncate)
+    val m = obs.get
+    val srcRows = m("n").asInstanceOf[Long]
+    val srcSum = Option(m("chk")).map(_.asInstanceOf[Long]).getOrElse(0L)
+    val (dstRows, dstSum) = stats(read(spark, typed(dst, df.schema), table))
+    val ok = !validateChecksum || srcSum == dstSum
+    TransferResult(table, srcRows, dstRows, ok && srcRows == dstRows)
+  }
+
+  /** Re-size a file source's write parallelism from row count × estimated
+    * row width: for JDBC targets this bounds per-partition transaction size
+    * (the reference's max_rows_per_batch bound), for file targets it stops a
+    * single-row-group source from funnelling the write through one task.
+    * Only ever scales UP: collapsing a parallel source would serialize the
+    * write. The count is metadata-only (Catalyst strips the conversion
+    * projections under a bare count). */
+  private def scaleUpPartitions(df: DataFrame, dst: Endpoint): DataFrame = {
+    val width = math.max(df.schema.defaultSize, 20 * df.schema.size)
+    val targetBytes = dst match {
+      case _: Jdbc => 64L << 20
+      case _ => 16L << 20
+    }
+    val target = graft.catalog.Catalog.suggestNumPartitions(
+      df.count(), width, targetBytesPerPartition = targetBytes)
+    if (target > df.rdd.getNumPartitions) df.repartition(target) else df
   }
 }

@@ -469,4 +469,149 @@ class TransferSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(root._3 == docs.length.toLong)
     assert((root._6 == 1L) == byLevel(0L).exists(_._6 == 1L))
   }
+
+  // ---------------------------------- JDBC sources: one read per table
+
+  /** A fresh in-memory Derby database holding the given statements. */
+  private def derby(tag: String, ddl: String*): String = {
+    val url = s"jdbc:derby:memory:${tag}_${System.nanoTime()};create=true"
+    val c = java.sql.DriverManager.getConnection(url)
+    try { val st = c.createStatement(); ddl.foreach(st.execute) } finally c.close()
+    url
+  }
+
+  private def derbyLong(url: String, sql: String): Long = {
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      val rs = c.createStatement().executeQuery(sql)
+      rs.next(); rs.getLong(1)
+    } finally c.close()
+  }
+
+  test("Derby -> Derby pipeline copies NULL strings into VARCHAR target columns") {
+    val src = derby("nulls_src",
+      "CREATE TABLE PEOPLE (ID INT NOT NULL PRIMARY KEY, NAME VARCHAR(40), " +
+        "NOTE VARCHAR(200), SCORE DECIMAL(8,2))",
+      "INSERT INTO PEOPLE VALUES (1, 'ann', NULL, 1.50), (2, NULL, 'x', NULL), " +
+        "(3, NULL, NULL, 3.00), (4, 'dee', '', 4.25)")
+    val dst = derby("nulls_dst")
+    val report = Pipeline.run(spark, Jdbc(src, "%s"), Jdbc(dst, "%s"),
+      Pipeline.Config(stages = Seq("schema", "data", "validate")),
+      tables = Seq("PEOPLE"))
+    assert(report.stats.map(_.stage) == Seq("schema", "data", "validate"))
+    assert(report.stats.forall(_.failures.isEmpty), report.stats)
+    assert(report.results == Seq(Transfer.TransferResult("PEOPLE", 4L, 4L, true)))
+    assert(report.inconsistent.isEmpty)
+    // the schema stage made VARCHAR columns; NULL and '' stay distinct
+    val c = java.sql.DriverManager.getConnection(dst)
+    try {
+      val rs = c.getMetaData.getColumns(null, null, "PEOPLE", "NAME")
+      assert(rs.next() && rs.getString("TYPE_NAME") == "VARCHAR")
+    } finally c.close()
+    assert(derbyLong(dst, "SELECT COUNT(*) FROM PEOPLE WHERE NAME IS NULL") == 2)
+    assert(derbyLong(dst, "SELECT COUNT(*) FROM PEOPLE WHERE NOTE IS NULL") == 2)
+    assert(derbyLong(dst, "SELECT COUNT(*) FROM PEOPLE WHERE NOTE = ''") == 1)
+    // a target table the JDBC writer creates itself has CLOB string
+    // columns; the same NULLs bind there too
+    val own = derby("nulls_clob")
+    val r = Transfer.copyTable(spark, Jdbc(src, "%s"), Jdbc(own, "%s"), "PEOPLE")
+    assert(r == Transfer.TransferResult("PEOPLE", 4L, 4L, true))
+    assert(derbyLong(own, "SELECT COUNT(*) FROM PEOPLE WHERE NAME IS NULL") == 2)
+  }
+
+  test("DerbyGraftDialect delegates every method Spark's Derby dialect declares") {
+    import java.lang.reflect.Modifier
+    import org.apache.spark.sql.jdbc.JdbcDialects
+    import org.apache.spark.sql.types.StringType
+    import graft.types.DerbyGraftDialect
+    def declared(c: Class[_]) = c.getDeclaredMethods.toSeq
+      .filter(m => Modifier.isPublic(m.getModifiers) && !Modifier.isStatic(m.getModifiers))
+      .map(m => m.getName -> m.getParameterTypes.toSeq).toSet
+    // the case-class boilerplate of Spark's dialect is not dialect behavior
+    val caseClass = classOf[Product].getMethods.map(_.getName).toSet ++
+      Set("copy", "equals", "hashCode", "toString")
+    val base = Class.forName("org.apache.spark.sql.jdbc.DerbyDialect")
+    val behavior = declared(base).filterNot(m => caseClass(m._1))
+    assert(behavior.exists(_._1 == "getLimitClause"), behavior)
+    val missing = behavior -- declared(classOf[DerbyGraftDialect])
+    assert(missing.isEmpty, missing)
+    DerbyGraftDialect.install()
+    val d = JdbcDialects.get("jdbc:derby:memory:any")
+    assert(d.isInstanceOf[DerbyGraftDialect], d.getClass)
+    val str = d.getJDBCType(StringType).get
+    assert(str.databaseTypeDefinition == "CLOB" && str.jdbcNullType == java.sql.Types.VARCHAR)
+    assert(d.getLimitClause(5) != "LIMIT 5", "Derby's own limit clause is kept")
+  }
+
+  test("single-read JDBC copy: an empty source table validates and is created") {
+    val src = derby("empty_src", "CREATE TABLE EMPTY_T (ID INT NOT NULL, V VARCHAR(10))")
+    val dst = derby("empty_dst")
+    val r = Transfer.copyTable(spark, Jdbc(src, "%s"), Jdbc(dst, "%s"), "EMPTY_T")
+    assert(r == Transfer.TransferResult("EMPTY_T", 0L, 0L, checksumMatch = true))
+    assert(Transfer.exists(spark, Jdbc(dst, "%s"), "EMPTY_T"))
+    assert(derbyLong(dst, "SELECT COUNT(*) FROM EMPTY_T") == 0)
+  }
+
+  test("single-read JDBC copy: a partitioned source keeps count and checksum") {
+    val rows = (1 to 1000).map(i =>
+      s"($i, ${if (i % 7 == 0) "NULL" else s"'v$i'"}, ${i * 3}.25)")
+    val src = derby("part_src",
+      "CREATE TABLE NUMS (ID BIGINT NOT NULL, V VARCHAR(20), AMT DECIMAL(10,2))",
+      s"INSERT INTO NUMS VALUES ${rows.mkString(", ")}")
+    val srcEp = Jdbc(src, "%s", partitionColumn = Some("ID"), numPartitions = 4)
+    assert(Transfer.read(spark, srcEp, "NUMS").rdd.getNumPartitions == 4)
+    val dst = Jdbc(derby("part_dst"), "%s")
+    val r = Transfer.copyTable(spark, srcEp, dst, "NUMS")
+    assert(r == Transfer.TransferResult("NUMS", 1000L, 1000L, checksumMatch = true))
+    // independent two-sided compare agrees with the fused observation
+    assert(Transfer.stats(Transfer.read(spark, srcEp, "NUMS")) ==
+      Transfer.stats(Transfer.read(spark, dst, "NUMS")))
+  }
+
+  test("single-read JDBC copy: zero-date strings are nulled and still validate") {
+    val src = derby("zero_src",
+      "CREATE TABLE EVENTS (ID INT NOT NULL, HAPPENED VARCHAR(30), NOTE VARCHAR(60))",
+      "INSERT INTO EVENTS VALUES (1, '0000-00-00 00:00:00', 'zero'), " +
+        "(2, '2024-05-06 07:08:09', '0000-00-00 is the MySQL zero date'), " +
+        "(3, '0000-00-00', NULL)")
+    val dst = derby("zero_dst")
+    val r = Transfer.copyTable(spark, Jdbc(src, "%s"), Jdbc(dst, "%s"), "EVENTS")
+    assert(r == Transfer.TransferResult("EVENTS", 3L, 3L, checksumMatch = true))
+    assert(derbyLong(dst, "SELECT COUNT(*) FROM EVENTS WHERE HAPPENED IS NULL") == 2)
+    // free text that merely begins with the literal is not a zero date
+    assert(derbyLong(dst, "SELECT COUNT(*) FROM EVENTS WHERE NOTE IS NOT NULL") == 2)
+  }
+
+  test("single-read JDBC copy: a target corrupted after the copy is inconsistent") {
+    val src = Jdbc(derby("bad_src",
+      "CREATE TABLE T (ID INT NOT NULL, V VARCHAR(10))",
+      "INSERT INTO T VALUES (1, 'a'), (2, 'b'), (3, NULL)"), "%s")
+    val dst = Jdbc(derby("bad_dst"), "%s")
+    assert(Transfer.copyTable(spark, src, dst, "T").checksumMatch)
+    def corrupt(sql: String): Unit = {
+      val c = java.sql.DriverManager.getConnection(dst.url)
+      try c.createStatement().executeUpdate(sql) finally c.close()
+    }
+    corrupt("UPDATE T SET V = 'z' WHERE ID = 2") // same count, other value
+    val changed = Transfer.validate(spark, src, dst, "T")
+    assert(changed.srcRows == 3 && changed.dstRows == 3 && !changed.checksumMatch)
+    corrupt("DELETE FROM T WHERE ID = 1")
+    val lost = Transfer.validate(spark, src, dst, "T")
+    assert(lost.srcRows == 3 && lost.dstRows == 2 && !lost.checksumMatch)
+  }
+
+  test("single-read JDBC copy leaves no persisted RDD or cached plan behind") {
+    val src = Jdbc(derby("state_src",
+      "CREATE TABLE S (ID INT NOT NULL, V VARCHAR(10))",
+      "INSERT INTO S VALUES (1, 'a'), (2, NULL)"), "%s")
+    val dst = Jdbc(derby("state_dst"), "%s")
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val r = Transfer.copyTable(spark, src, dst, "S")
+    assert(r == Transfer.TransferResult("S", 2L, 2L, checksumMatch = true))
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    assert(cache.isEmpty)
+  }
 }

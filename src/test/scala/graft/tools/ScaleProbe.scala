@@ -10,8 +10,9 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
   * contract via SPARK_GRAFT_CPUS, same maxPartitionBytes, same AQE flag)
   * with a SparkListener accumulating, per query:
   *   jobs, stages, tasks, sum of task run times, sum of scheduler-visible
-  *   task deserialize/serialize overhead, and wall time (min of 2 runs,
-  *   stats from the faster run's scale).
+  *   task deserialize/serialize overhead, and wall time. Each query runs
+  *   twice and both rows are printed; read the faster one (the first run
+  *   pays the cold JIT and plan caches).
   *
   * wall >> taskTime/cores  --> scheduling/driver overhead dominates
   * tasks >> rows/64k       --> partition counts oversized for the data
@@ -20,12 +21,31 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
   * ("k1=v1;k2=v2") to A/B e.g. AQE coalescing settings without editing
   * the harness. Usage:
   *   SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.tools.ScaleProbe q133_curriculum ..."
+  *
+  * Bad input (no query, an unknown query name, a conf pair without `=`)
+  * is refused before the session starts, with a message naming the value.
   */
 object ScaleProbe {
+  private def fail(msg: String): Nothing = {
+    System.err.println(s"ScaleProbe: $msg\nusage: ScaleProbe <query>... " +
+      "(SPARK_GRAFT_EXTRA_CONF=\"k1=v1;k2=v2\")")
+    sys.exit(2)
+  }
+
   def main(args: Array[String]): Unit = {
+    if (args.isEmpty) fail("no query named")
+    val unknown = args.filterNot(graft.SparkEntry.queries.contains)
+    if (unknown.nonEmpty) fail(s"unknown query: ${unknown.mkString(", ")}")
+    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(";")).filter(_.nonEmpty).map { pair =>
+        pair.split("=", 2) match {
+          case Array(k, v) if k.nonEmpty => k -> v
+          case _ => fail(s"SPARK_GRAFT_EXTRA_CONF pair '$pair' is not k=v")
+        }
+      }
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var b = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.files.maxPartitionBytes", String.valueOf(4L << 20))
@@ -33,13 +53,8 @@ object ScaleProbe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { kv =>
-      kv.split(";").filter(_.nonEmpty).foreach { pair =>
-        val Array(k, v) = pair.split("=", 2)
-        b = b.config(k, v)
-      }
-    }
-    val spark = b.getOrCreate()
+      .config(extraConf.toMap)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // same warmup block as Bench
     spark.range(1000000).selectExpr("sum(id)").collect()
